@@ -173,19 +173,7 @@ object ExtensionQueries {
   private[graft] val ArrivalOffsets: Map[String, Long] = Map(
     "increment" -> IncrementOffset,
     "resubmit" -> ResubmitOffset,
-    "day2" -> Day2Offset,
-    // the replica-scale probes' bridge-chain doc domains (ClusterFoldProbe
-    // and StreamClustersProbe's relabel-bearing day batches) — registered
-    // here so IdDomainSpec guards them like every query domain: an earlier
-    // revision parked them at 5.5/6.5·10¹², INSIDE the increment/resubmit
-    // spans, where a >5,000-copy replica would have collided the bridges
-    // with the probes' own re-crawl ids
-    "probe_bridge_day1" -> 8000000000000L,
-    "probe_bridge_day2" -> 9000000000000L,
-    // the SEEDED dir's relabel-bearing day batch (StreamClustersProbe's
-    // ST11 phase) — its bridges must merge the seeded map's clusters,
-    // and its ids must clear every domain already live in the seed
-    "probe_bridge_seeded" -> 10000000000000L)
+    "day2" -> Day2Offset)
 
   /** X32 — INCREMENTAL near-dup: the daily-ingest recurrence. The
     * corpus is `documents`; the increment batch is a deterministic
@@ -1153,8 +1141,8 @@ object ExtensionQueries {
     // 1. Stage the NEXT epoch's patch — invisible: readers resolve the
     //    patch by the committed epoch. A crashed earlier attempt's
     //    stale e+1 table is simply overwritten. The common pure-append
-    //    day (no relabels ever — ClusterFoldProbe saw exactly this at
-    //    125×m) writes no patch at all.
+    //    day (no relabels ever — measured at 125×m, PERF.md round 13)
+    //    writes no patch at all.
     if (composed.nonEmpty) {
       val pt = clusterPatchTable(table, e + 1)
       ClusterFoldHooks.beforeStagePatch()
@@ -1687,7 +1675,7 @@ object ExtensionQueries {
     * generates candidates, the exact-decimal rerank picks top-10 —
     * and the oracle is x5's brute-force SQL, so a hash match proves
     * the bucketed path reproduces the exact result on this corpus
-    * (recall measured 1.000 at sf0.001/0.01/0.1 — see AnnRecall;
+    * (recall measured 1.000 at sf0.001/0.01/0.1 — PERF.md;
     * same contract shape as x3's MinHash-LSH vs exact Jaccard). */
   def x5bAnnLshTopK(s: SparkSession, d: String): DataFrame =
     x5bAnnLshTopKImpl(s, d, decimalRef = false)
@@ -1713,7 +1701,7 @@ object ExtensionQueries {
   /** The IVF ANN scale path under a recall contract: probed k-means
     * cells (nLists=8, nProbe=5, fixed seed) against the brute-force
     * top-10, reporting per-query truth size and a corpus-level
-    * recall ≥ 0.7 flag (measured 0.89–0.98 across sfs — AnnRecall;
+    * recall ≥ 0.7 flag (measured 0.89–0.98 across sfs — PERF.md;
     * k-means cells are data-adaptive, so unlike x5b the result is not
     * bit-reproducible from SQL and the contract is the floor, not the
     * exact set). */
@@ -3776,7 +3764,7 @@ object ExtensionQueries {
     * `index/c=`/`cmap/c=` snapshot layers — pure map-only copies,
     * O(artifact bytes), no corpus re-pairing (the cost a seedless
     * adoption pays: the whole corpus pair listing again in trigger 0,
-    * StreamClustersProbe's bootstrap row) — and the remaining third
+    * the bootstrap row in PERF.md round 15) — and the remaining third
     * streams through as the day's live trigger, pairing against the
     * seeded index and folding into the seeded map. The composed view
     * must therefore equal the from-scratch cluster map of the WHOLE

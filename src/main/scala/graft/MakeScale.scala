@@ -87,18 +87,7 @@ object MakeScale {
     val src = if (pos.length > 0) pos(0) else "/root/testdata/sf0.1"
     val dst = if (pos.length > 1) pos(1) else "/tmp/sf0.5x"
     val copies = if (pos.length > 2) pos(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // getOrCreate: under a test harness this reuses (and must not
-    // stop) the suite's session — main only stops what it created
-    val hadSession = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, src, dst, copies, mutate)
-    if (!hadSession) spark.stop()
+    LocalSession.run(run(_, src, dst, copies, mutate))
   }
 
   /** Consistent per-copy vocabulary rename (see object doc): token w →

@@ -1,30 +1,33 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.atomic.AtomicLong
+
+/** Dev timing main: `runMain graft.TimeOne <name> [sfDir] [reps]` runs
+  * a registered query (or a stress / dissection name below) `reps`
+  * times through the noop sink after a warm-up and prints each rep's
+  * wall time and task spill. Under a constrained heap (build.sbt reads
+  * `SPARK_DRIVER_MEM` and `SPARK_GRAFT_EXTRA_JAVA_OPTS`) the spill
+  * columns show whether an operator degrades to disk instead of OOMing. */
 object TimeOne {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = LocalSession.run(run(args, _))
+
+  private def run(args: Array[String], spark: SparkSession): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE decouples reduce partition count from task
-    // slots (the SpillProbe levers) for memory-posture experiments
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v" — posture experiments (sort-agg
-    // forced, AQE width knobs) without editing the harness per run
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // spill per rep, summed over task ends (reset before each rep)
+    val memSpilled = new AtomicLong(0L)
+    val diskSpilled = new AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach { m =>
+          memSpilled.addAndGet(m.memoryBytesSpilled)
+          diskSpilled.addAndGet(m.diskBytesSpilled)
+        }
+    })
     // 20x-replicated documents (ids offset per copy) — stress input
     // approximating the next scale factor up
     def docs20x = {
@@ -528,9 +531,23 @@ object TimeOne {
       }
     }
     (1 to reps).foreach { r =>
+      memSpilled.set(0L); diskSpilled.set(0L)
       val t0 = System.nanoTime()
       dfFor(name).write.format("noop").mode("overwrite").save()
-      println(f"[timeone] $name rep$r: ${(System.nanoTime()-t0)/1e9}%.2f s")
+      val sec = (System.nanoTime() - t0) / 1e9
+      // listener events drain asynchronously: poll until the counters
+      // hold still (10 s deadline) so no event bleeds into the next rep
+      // (listenerBus.waitUntilEmpty is private[spark])
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var prev = (-1L, -1L)
+      var cur = (memSpilled.get, diskSpilled.get)
+      while (cur != prev && System.nanoTime() < deadline) {
+        prev = cur
+        Thread.sleep(200)
+        cur = (memSpilled.get, diskSpilled.get)
+      }
+      println(f"[timeone] $name rep$r: $sec%.2f s " +
+        s"spill_mem_mb=${cur._1 >> 20} spill_disk_mb=${cur._2 >> 20}")
     }
     // SPARK_GRAFT_EXPLAIN=1: dump the FINAL adaptive plan (collect()
     // so AQE finalizes on this very QueryExecution — a noop write
@@ -541,6 +558,5 @@ object TimeOne {
       println(s"[timeone] final adaptive plan for $name:\n" +
         df.queryExecution.executedPlan.toString)
     }
-    spark.stop()
   }
 }

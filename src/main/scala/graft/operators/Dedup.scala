@@ -258,7 +258,7 @@ object Dedup {
     * the pair partial-aggregate run in one stage whose per-task state
     * scales with postings/partitions, and 32 concurrent tasks racing
     * the unified memory manager for it spill (or not) per scheduling
-    * luck. The SpillProbe lever that works here is WIDTH, not task
+    * luck. The spill lever that works here is WIDTH, not task
     * count: at 256 partitions the catastrophic reps vanish (22-44 s
     * band vs 20-172; the 8-slot bound also stabilizes, ±10%, but at
     * 2.7× the warm min). So: widen the list-build exchange so

@@ -1,9 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{LocalSession, Scratch}
 import graft.sources.{CsvIngest, XmlShred}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Runnable end-to-end BlueForty pipeline: the 8 reference stages
   * (BlueForty.py Q1–Q8) over a local data directory, materializing the
@@ -30,17 +31,10 @@ object BlueFortyMain {
     val outDir = Paths.get(
       if (args.length > 1) args(1) else "/tmp/blueforty_out")
     Files.createDirectories(outDir)
+    LocalSession.run(run(dataDir, outDir, _))
+  }
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("blueforty-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def run(dataDir: Path, outDir: Path, spark: SparkSession): Unit = {
     import spark.implicits._
 
     def save(df: DataFrame, name: String): DataFrame = {
@@ -52,7 +46,8 @@ object BlueFortyMain {
     }
 
     // Q1: stage + typed load
-    val stage = Files.createTempDirectory("blueforty_stage")
+    // a self-cleaning scratch dir: the staged copies are gone at exit
+    val stage = Paths.get(Scratch.dir("blueforty_stage"))
     CsvIngest.stageFiles(
       CsvIngest.discover(dataDir).filter(
         _.getFileName.toString.startsWith("purchases")), stage)
@@ -110,7 +105,5 @@ object BlueFortyMain {
     // Q8: final enrichment
     save(BlueFortyPipeline.purchasesWithWeather(poInv, supplierCase, weather),
       "PURCHASES_WITH_WEATHER")
-
-    spark.stop()
   }
 }

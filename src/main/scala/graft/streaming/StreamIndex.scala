@@ -138,7 +138,9 @@ private[graft] object StreamIndex {
     * (default 8g at the 5× replica) MEMORY_AND_DISK checkpoint
     * blocks cost the trigger's pair stage ~2.5 s of eviction/GC
     * pressure, while at an adequately-sized heap the two levels
-    * measure at par (St10Dissect matrix, OPTIMIZATION_r16.md).
+    * measure at par (the storage-level matrix in OPTIMIZATION_r16.md;
+    * `python3 perfbench/run.py --workload etl_day --trace 1` splits a
+    * trigger into its pair/fold/compact/serve phases).
     * Accepts any `StorageLevel.fromString` name. */
   val BatchCkptStorageConf = "spark.graft.streamCkptStorage"
 

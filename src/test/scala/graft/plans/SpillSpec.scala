@@ -6,11 +6,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
 /** Spill-path pin: a 100 TB design that has never spilled is unproven.
-  * SpillProbe records the constrained-heap evidence at replica scale
-  * (PERF.md); this spec pins the MECHANISM deterministically — when an
-  * operator's in-memory buffer crosses its spill threshold, execution
-  * degrades to UnsafeExternalSorter disk spill and the result stays
-  * bit-identical.
+  * PERF.md records the constrained-heap evidence at replica scale
+  * (TimeOne prints each rep's spill); this spec pins the MECHANISM
+  * deterministically — when an operator's in-memory buffer crosses
+  * its spill threshold, execution degrades to UnsafeExternalSorter
+  * disk spill and the result stays bit-identical.
   *
   * The knob is `spark.sql.windowExec.buffer.spill.threshold` (a
   * runtime SQLConf): WindowExec's ExternalAppendOnlyUnsafeRowArray
